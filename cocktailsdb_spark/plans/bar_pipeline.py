@@ -110,33 +110,35 @@ def process_sales_data(
     budapest_path: str,
     london_path: str,
     ny_path: str,
-    store: WatermarkStore,
+    marks: dict,
 ) -> tuple[DataFrame, dict]:
     """Stage 4 (build_database.py:95-168): three heterogeneous scans →
-    per-source bar tag (P8) + strict-> watermark filter (P9) + new-mark
-    computation (A2) → union (O3) → saleID (P3) → price double (P5) →
+    per-source bar tag (P8) + strict-> watermark filter (P9) against
+    ``marks`` (the control table, read once by the caller) → union (O3) →
+    new-mark computation (A2) → saleID (P3) → price double (P5) →
     lowercase (P7).
 
-    Returns (conformed sales, new marks). The CALLER writes the marks after
-    the sink commits — the §3.4 ordering fix."""
-    marks = store.read(spark)
+    The new marks of all sources come from ONE grouped job over the
+    unioned slice (each source file is parsed once for it). Returns
+    (conformed sales, new marks). The CALLER writes the marks after the
+    sink commits — the §3.4 ordering fix."""
     sources = {
         "budapest": csv_sources.read_sales_iso_csv(spark, budapest_path),
         "london": csv_sources.read_sales_tsv_headerless(spark, london_path),
         "new york": csv_sources.read_sales_us_dates(spark, ny_path),
     }
-    new_marks = dict(marks)
-    frames = []
-    for bar, df in sources.items():
-        wm = marks.get(bar, DEFAULT_MARK)
-        inc = conform.filter_after_watermark(
-            conform.with_source_tag(df, "bar", bar), "dateOfSale", wm
+    frames = [
+        conform.filter_after_watermark(
+            conform.with_source_tag(df, "bar", bar),
+            "dateOfSale",
+            marks.get(bar, DEFAULT_MARK),
         )
-        mx = inc.agg(F.max("dateOfSale")).first()[0]  # A2
-        if mx is not None:
-            new_marks[bar] = mx
-        frames.append(inc)
+        for bar, df in sources.items()
+    ]
     sales = conform.union_by_name(frames)
+    new_marks = dict(marks)
+    for r in sales.groupBy("bar").agg(F.max("dateOfSale").alias("mx")).collect():  # A2
+        new_marks[r["bar"]] = r["mx"]
     sales = conform.add_surrogate_key(
         sales.drop("idx"), "saleID", ["bar", "dateOfSale", "drink", "price"]
     )
@@ -252,7 +254,7 @@ def build_database(
     with runlog.stage("sales_data"):
         marks_before = store.read(spark)
         sales, new_marks = process_sales_data(
-            spark, budapest_path, london_path, ny_path, store
+            spark, budapest_path, london_path, ny_path, marks_before
         )
     if marks_before and new_marks == marks_before and all(
         _attach_table(spark, db, t, base_dir)

@@ -5,9 +5,11 @@ Two sinks, same as the reference: the standard :mod:`logging` stream (for
 operators/humans) and a durable ``run_history`` parquet control table (for
 the pipeline itself — the queryable replacement for grepping a log file).
 Events are buffered in memory per run and appended in ONE small write when
-the run closes, so logging never adds per-stage Spark jobs; a failed stage
-still flushes what happened (status='error' + the exception class), which
-is exactly the forensic record the reference's log provides after a crash.
+the run closes, so logging never adds per-stage Spark jobs. The rows of that
+write are built in the JVM (``watermark.control_frame``), so it runs no
+Python worker. A failed stage still flushes what happened (status='error' +
+the exception class), which is exactly the forensic record the reference's
+log provides after a crash.
 """
 
 from __future__ import annotations
@@ -18,12 +20,22 @@ import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from .sources.watermark import control_frame
 
 log = logging.getLogger("cocktailsdb_spark")
 
-RUN_HISTORY_SCHEMA = (
-    "run_id string, stage string, seq int, started_at timestamp, "
-    "finished_at timestamp, status string, detail string"
+RUN_HISTORY_SCHEMA = T.StructType(
+    [
+        T.StructField("run_id", T.StringType()),
+        T.StructField("stage", T.StringType()),
+        T.StructField("seq", T.IntegerType()),
+        T.StructField("started_at", T.TimestampType()),
+        T.StructField("finished_at", T.TimestampType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("detail", T.StringType()),
+    ]
 )
 
 
@@ -60,11 +72,12 @@ class RunLog:
 
     def flush(self, spark: SparkSession) -> None:
         """Append this run's events to the run_history table (one small
-        single-file write — the control-table pattern of watermark.py)."""
+        single-file write of JVM-built rows — the control-table pattern of
+        watermark.py)."""
         if not self._events:
             return
-        df = spark.createDataFrame(self._events, schema=RUN_HISTORY_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        df = control_frame(spark, self._events, RUN_HISTORY_SCHEMA)
+        df.write.mode("append").parquet(self.path)
         self._events = []
 
     @staticmethod

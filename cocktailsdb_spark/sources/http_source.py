@@ -120,8 +120,19 @@ def bounded_keys(df: DataFrame, col: str, cap: int = MAX_DRIVER_KEYS) -> list[st
 def fetch_df(
     spark: SparkSession, keys: Iterable[str], transport: Transport = http_transport
 ) -> DataFrame:
-    """S5 driver-side variant: collected distinct keys → rows → DataFrame."""
-    return spark.createDataFrame(fetch_rows(keys, transport), schema=COCKTAILS)
+    """S5 driver-side variant: collected distinct keys → rows → DataFrame.
+
+    The rows go to the JVM as one Arrow table (a ``LocalRelation``), not
+    through ``createDataFrame(list)``, whose Python RDD would make every
+    job reading the dimension run a Python worker. Arrow is safe here
+    because every column is a string: no timestamp conversion is involved."""
+    import pyarrow as pa
+
+    rows = fetch_rows(keys, transport)
+    table = pa.table(
+        {c: pa.array([r[c] for r in rows], pa.string()) for c in PROJECT_COLS}
+    )
+    return spark.createDataFrame(table, schema=COCKTAILS)
 
 
 def fetch_distributed(

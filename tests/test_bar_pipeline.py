@@ -179,3 +179,54 @@ def test_strict_gt_watermark_new_rows_only(spark, built, bar_fixtures, tmp_path)
     kept = {r["strDrink"] for r in cocktails.select("strDrink").collect()}
     assert "mojito" in kept and "spritz" in kept
     assert cocktails.groupBy("idDrink").count().filter("count > 1").count() == 0
+
+
+def test_sales_marks_in_one_grouped_job(spark, bar_fixtures):
+    """All three sources' new marks come from one grouped collect (AQE
+    runs it as a shuffle-map job plus a result job); a per-source loop
+    would launch two jobs per source."""
+    sc = spark.sparkContext
+    sc.setJobGroup("process_sales_data", "process_sales_data")
+    try:
+        _, marks = bar_pipeline.process_sales_data(
+            spark, bar_fixtures["budapest"], bar_fixtures["london"],
+            bar_fixtures["ny"], {},
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(marks) == set(bar_pipeline.SOURCE_BARS)
+    assert len(sc.statusTracker().getJobIdsForGroup("process_sales_data")) == 2
+
+
+def test_first_run_on_empty_sources(spark, bar_fixtures, tmp_path):
+    """Header-only inputs: the first run writes empty tables and an empty
+    but readable control table. Empty marks never short-circuit, so the
+    next run loads every row that arrived since."""
+    empty = {}
+    for key, header in (
+        ("budapest", ",TS,ital,költség\n"),
+        ("london", ""),  # headerless TSV: no header, no rows
+        ("ny", ",time,drink,amount\n"),
+    ):
+        path = tmp_path / f"{key}.csv.gz"
+        with gzip.open(path, "wt") as f:
+            f.write(header)
+        empty[key] = str(path)
+    base = str(tmp_path / "bar_db")
+
+    def build(src):
+        return bar_pipeline.build_database(
+            spark, base, bar_fixtures["bar_data"], src["budapest"], src["london"],
+            src["ny"], transport=fake_transport,
+        )
+
+    assert build(empty).count() == 0
+    store = WatermarkStore(os.path.join(base, "last_update"))
+    assert os.path.isdir(store.path)
+    assert store.read(spark) == {}
+    assert spark.read.parquet(os.path.join(base, "global_sales")).count() == 0
+
+    assert build(bar_fixtures).count() > 0
+    assert spark.read.parquet(os.path.join(base, "global_sales")).count() == 20 + 15 + 11
+    assert set(store.read(spark)) == set(bar_pipeline.SOURCE_BARS)
