@@ -60,7 +60,9 @@ _POW10 = [10**i for i in range(LEXPACK_MAX_DIGITS + 1)]
 def lexpack(side: int, key: Column) -> Column:
     """Pack a non-negative integer ``key`` (< 10^13) and a 0/1 ``side``
     flag into a LONG whose numeric order equals the lexicographic order
-    of the strings  tag_side || digits(key)  (tag_0 < tag_1).
+    of the strings  tag_side || digits(key)  (tag_0 < tag_1). A key
+    outside [0, 10^13) fails the query instead of packing to a wrong
+    long; a NULL key packs to NULL.
 
     Why it is order-isomorphic (within one side): let a, b be the digit
     strings of x, y (no leading zeros) and A = x·10^(L−|a|),
@@ -83,7 +85,18 @@ def lexpack(side: int, key: Column) -> Column:
         F.array(*[F.lit(p) for p in _POW10]),
         (F.lit(LEXPACK_MAX_DIGITS + 1) - ln).cast("int"),
     )
-    return (F.lit(side).cast("long") * F.lit(1 << 60)) + s * pad * 16 + ln
+    packed = (F.lit(side).cast("long") * F.lit(1 << 60)) + s * pad * 16 + ln
+    # out of range the index is ≤ 0 (a negative one counts from the
+    # array's END — a silently wrong pad) or the sign breaks the order
+    in_range = s.between(0, 10**LEXPACK_MAX_DIGITS - 1)
+    return F.when(in_range | s.isNull(), packed).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"lexpack: key outside [0, 10^{LEXPACK_MAX_DIGITS}): "),
+                s.cast("string"),
+            )
+        )
+    )
 
 
 def lexunpack(packed: Column, tag0: str, tag1: str) -> Column:

@@ -521,35 +521,20 @@ def winsorized_stats(
 
     Cutoffs use the same type-1 (pure element selection, zero
     interpolation) quantile as :func:`quantile_disc`, so they are exact
-    across engines; clipping is least/greatest against the broadcast
-    group-sized cutoff row; moments are decimal-exact ``dsum`` power sums
-    (order-insensitive), combined into mean/stddev with one identical
-    double expression per engine. Two data shuffles total — the rank
-    window and the final aggregate; at 100 TB the cutoffs come from a
-    bounded sample instead of the exact rank (this operator is the
-    exact-verify twin of that plan).
+    across engines, but come from the histogram-narrowed two-pass
+    selection (:func:`quantile_two_pass`) instead of a per-group rank
+    window: no task ever sorts more than one histogram bucket
+    (~n/n_buckets rows), where a group-partitioned window sorts whole
+    groups (n/5 rows in one task). Clipping is least/greatest against the
+    broadcast group-sized cutoff row; moments are decimal-exact ``dsum``
+    power sums (order-insensitive), combined into mean/stddev with one
+    identical double expression per engine.
     """
-    w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    ranked = orders.select(
+    cuts = quantile_two_pass(orders, qs=(lo, hi)).select(
         "o_orderpriority",
-        "o_totalprice",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("o_orderpriority")).alias("n"),
+        F.col(f"p{int(lo * 100)}").alias("p_lo"),
+        F.col(f"p{int(hi * 100)}").alias("p_hi"),
     )
-
-    def _at(q: float) -> Column:
-        idx = F.floor(F.lit(q) * (F.col("n") - 1)).cast("int") + 1
-        return F.max(F.when(F.col("rn") == idx, F.col("o_totalprice")))
-
-    cuts = ranked.groupBy("o_orderpriority").agg(
-        _at(lo).alias("p_lo"), _at(hi).alias("p_hi")
-    )
-    return _winsorized_from_cuts(orders, cuts)
-
-
-def _winsorized_from_cuts(orders: DataFrame, cuts: DataFrame) -> DataFrame:
-    """Shared clip + decimal-moment tail: broadcast the group-sized
-    (o_orderpriority, p_lo, p_hi) cutoff frame, clip, aggregate."""
     v = F.greatest(F.least(F.col("o_totalprice"), F.col("p_hi")), F.col("p_lo"))
     g = (
         orders.join(F.broadcast(cuts), "o_orderpriority")
@@ -574,26 +559,6 @@ def _winsorized_from_cuts(orders: DataFrame, cuts: DataFrame) -> DataFrame:
         qround(sx / n, 4).alias("win_mean"),
         F.when(n > 1, qround(F.sqrt(var), 4)).alias("win_std"),
     )
-
-
-def winsorized_stats_scaled(
-    orders: DataFrame, lo: float = 0.05, hi: float = 0.95
-) -> DataFrame:
-    """:func:`winsorized_stats` at scale: identical output, but the
-    quantile cutoffs come from the histogram-narrowed two-pass selection
-    (:func:`quantile_two_pass`) instead of a per-group rank window — no
-    task ever sorts more than one histogram bucket (~n/n_buckets rows),
-    where the exact form's window sorts whole groups (n/5 rows in one
-    task: the plan that dies first at 100 TB). Same type-1
-    k = floor(q·(n−1))+1 selection, so the cutoffs — and therefore every
-    downstream clipped moment — are equal BY CONSTRUCTION, which is why
-    both forms share one DuckDB oracle."""
-    cuts = quantile_two_pass(orders, qs=(lo, hi)).select(
-        "o_orderpriority",
-        F.col(f"p{int(lo * 100)}").alias("p_lo"),
-        F.col(f"p{int(hi * 100)}").alias("p_hi"),
-    )
-    return _winsorized_from_cuts(orders, cuts)
 
 
 INCR_JOIN_CUTOFF = "1998-01-01"
@@ -724,55 +689,10 @@ def spearman_rank_corr(lineitem: DataFrame) -> DataFrame:
     (stats_moments, correlation_matrix): outlier-proof, and the right
     correlation for skewed columns a profiler meets in the wild.
 
-    Classical average-rank tie handling: avg_rank = min_rank + (ties−1)/2
-    from a rank window plus a (group, value)-count window; ranks are
-    half-integers, exactly representable, so the Pearson-on-ranks moment
-    sums are DECIMAL-exact and both engines combine them with one
-    identical IEEE expression (the stats_moments recipe). Two window
-    specs + the final aggregate; all partition by the group key first, so
-    the group is the parallelism unit.
-    """
-    g = "l_returnflag"
-    x, y = "l_quantity", "l_extendedprice"
-
-    def avg_rank(col: str) -> Column:
-        rk = F.rank().over(Window.partitionBy(g).orderBy(col))
-        ties = F.count("*").over(Window.partitionBy(g, col))
-        return rk + (ties - F.lit(1)) / F.lit(2.0)
-
-    ranked = lineitem.select(
-        g,
-        avg_rank(x).alias("rx"),
-        avg_rank(y).alias("ry"),
-    )
-    m = ranked.groupBy(g).agg(
-        F.count("*").cast("double").alias("n"),
-        dsum(F.col("rx")).alias("sx"),
-        dsum(F.col("ry")).alias("sy"),
-        dsum(F.col("rx") * F.col("rx")).alias("sxx"),
-        dsum(F.col("ry") * F.col("ry")).alias("syy"),
-        dsum(F.col("rx") * F.col("ry")).alias("sxy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
-    den2 = (n * sxx - sx * sx) * (n * syy - sy * sy)
-    rho = (n * sxy - sx * sy) / F.sqrt(den2)
-    # degenerate group (constant column, n<2): den2 <= 0 -> NULL, never
-    # NaN — Spark's floor-based qround coerces NaN to a number while the
-    # DuckDB twin keeps it, so NaN must not reach qround
-    return m.select(
-        g,
-        n.cast("long").alias("n"),
-        F.when(den2 > 0, qround(rho, 6)).alias("spearman_rho"),
-    )
-
-
-def spearman_rank_corr_scaled(lineitem: DataFrame) -> DataFrame:
-    """:func:`spearman_rank_corr` at scale — identical output, no
-    data-sized sort anywhere. The exact form's rank windows partition by
-    l_returnflag (3 groups), so one task sorts n/3 rows: the first plan
-    to die at 100 TB. This form computes the SAME average ranks from the
-    value histogram instead:
+    Classical average-rank tie handling, with no data-sized sort
+    anywhere: a rank window partitioned by l_returnflag (3 groups) would
+    sort n/3 rows in one task, so the average ranks come from the value
+    histogram instead:
 
         avg_rank(v) = (# rows with smaller value) + (count(v) + 1) / 2
 
@@ -781,12 +701,13 @@ def spearman_rank_corr_scaled(lineitem: DataFrame) -> DataFrame:
     cumulative windows over that frame (peers share one sort with the
     per-value total — no marginal aggregate, no join back), and weighted
     decimal moment sums
-    Σ c·r, Σ c·r², Σ c_xy·(r_x·r_y). Every per-row decimal addend equals
-    the exact form's (the r_x·r_y product is the same single IEEE double
-    multiply before the decimal cast), and decimal addition is
-    order-insensitive, so the moments — and ρ — match bit-for-bit; both
-    forms share one DuckDB oracle. The sort burden drops from O(n/groups)
-    to O(ndv/groups) per task."""
+    Σ c·r, Σ c·r², Σ c_xy·(r_x·r_y). Ranks are half-integers, exactly
+    representable, and each weighted addend equals the row-wise one
+    times its multiplicity (the r_x·r_y product is one IEEE double
+    multiply before the decimal cast), so the Pearson-on-ranks moment
+    sums are DECIMAL-exact and both engines combine them with one
+    identical IEEE expression (the stats_moments recipe). The sort
+    burden is O(ndv/groups) per task, not O(n/groups)."""
     g = "l_returnflag"
     x, y = "l_quantity", "l_extendedprice"
     # ndv-sized after the map-side-combined aggregate — materialize ONCE:
@@ -819,7 +740,7 @@ def spearman_rank_corr_scaled(lineitem: DataFrame) -> DataFrame:
     )
 
     def wdsum(val: Column) -> Column:
-        # the exact form's dsum addend (double → DECIMAL(24,8)) times the
+        # the row-wise dsum addend (double → DECIMAL(24,8)) times the
         # row multiplicity, multiplied IN DECIMAL — exact, so the sum
         # equals the row-wise decimal sum
         return F.sum(val.cast(DEC) * F.col("c")).cast("double")
@@ -837,6 +758,9 @@ def spearman_rank_corr_scaled(lineitem: DataFrame) -> DataFrame:
     sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
     den2 = (n * sxx - sx * sx) * (n * syy - sy * sy)
     rho = (n * sxy - sx * sy) / F.sqrt(den2)
+    # degenerate group (constant column, n<2): den2 <= 0 -> NULL, never
+    # NaN — Spark's floor-based qround coerces NaN to a number while the
+    # DuckDB twin keeps it, so NaN must not reach qround
     return m.select(
         g,
         n.cast("long").alias("n"),
@@ -1382,7 +1306,7 @@ def mann_whitney_u(orders: DataFrame) -> DataFrame:
     same two priority populations — the nonparametric twin of
     :func:`welch_ttest` for skewed revenue distributions.
 
-    Rank-free at scale (the spearman_rank_corr_scaled histogram trick,
+    Rank-free at scale (the spearman_rank_corr histogram trick,
     specialised): ranks never materialise per row. One data-sized
     map-side-combined aggregate builds the distinct-value frame
     (price → per-group counts); global cumulative counts come from a
@@ -1884,104 +1808,35 @@ def band_join_acctbal(
 
 
 SEGMENT_PCTS = (0.25, 0.5, 0.75, 0.9)
+SEGP_BUCKETS = 1024
+SEGP_DOMAIN = QTP_DOMAIN  # o_totalprice domain; prod: first-pass sample
 
 
 def segment_percentiles(
     orders: DataFrame,
     customer: DataFrame,
     pcts: tuple[float, ...] = SEGMENT_PCTS,
+    n_buckets: int = SEGP_BUCKETS,
+    domain: tuple[float, float] = SEGP_DOMAIN,
 ) -> DataFrame:
     """Exact per-group percentiles (PERCENTILE_DISC semantics: the
     smallest value whose cumulative count reaches ⌈q·n⌉) of order value
     by market segment — the per-segment pricing profile. approx_percentile
     trades exactness for mergeability; this is the exact form, and it
-    needs NO global sort: ONE segment-partitioned window ranks each
-    segment independently (the shuffle key is the group — the same
-    contract as any per-group rank), then an n-sized row filter picks the
-    ⌈q·n⌉-th row per (segment, q).
-
-    Skew note: segments are few and balanced here; a skewed group would
-    take the rfm_segments_scaled route (histogram cutoffs) — this entry
-    is the exact-verify twin of that pattern at per-group granularity.
-    """
-    j = orders.join(
-        F.broadcast(customer.select("c_custkey", "c_mktsegment")),
-        orders.o_custkey == F.col("c_custkey"),
-    ).select("c_mktsegment", F.col("o_totalprice").alias("v"))
-    # row_number ties at equal v are broken arbitrarily, but the PICKED
-    # value at any position inside a tie run is that run's v — the output
-    # never exposes which row won, so the result is deterministic.
-    # Explicit group-keyed repartition: the few-MB shuffle otherwise gets
-    # AQE-coalesced to ONE post-shuffle partition, serializing every
-    # per-segment sort in a single task (r14 measured 3.1 s exec, all
-    # 1-task stages); hash on the window key satisfies the window's
-    # required distribution so no second exchange is added, and group
-    # cardinality (~5 segments) caps effective parallelism either way.
-    target_p = orders.sparkSession.sparkContext.defaultParallelism
-    w = Window.partitionBy("c_mktsegment").orderBy("v")
-    ranked = j.repartition(target_p, "c_mktsegment").select(
-        "c_mktsegment",
-        "v",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("c_mktsegment")).alias("n"),
-    )
-    # ONE window pass: the previous per-q unionByName re-executed the
-    # sort+window per branch (ReuseExchange shares only the shuffle).
-    # Keep rows whose rank is ANY target ceil(q·n), then explode the
-    # (q, target) panel on that tiny hit set — two q's landing on the
-    # same rank emit two rows, exactly as the union form did.
-    targets = [F.ceil(F.lit(q) * F.col("n").cast("double")) for q in pcts]
-    hit_any = targets[0] == F.col("rn")
-    for t in targets[1:]:
-        hit_any = hit_any | (t == F.col("rn"))
-    qpanel = F.array(
-        *[
-            F.struct(
-                F.lit(q).alias("pct"),
-                F.ceil(F.lit(q) * F.col("n").cast("double")).alias("t"),
-            )
-            for q in pcts
-        ]
-    )
-    picks = (
-        ranked.filter(hit_any)
-        .select("c_mktsegment", "v", "rn", "n", F.explode(qpanel).alias("qt"))
-        .filter(F.col("qt.t") == F.col("rn"))
-        .select(
-            "c_mktsegment",
-            F.col("qt.pct").alias("pct"),
-            F.col("v").alias("value"),
-            F.col("n").cast("long").alias("n_orders"),
-        )
-    )
-    return picks.orderBy("c_mktsegment", "pct")
-
-
-SEGP_BUCKETS = 1024
-SEGP_DOMAIN = QTP_DOMAIN  # o_totalprice domain; prod: first-pass sample
-
-
-def segment_percentiles_scaled(
-    orders: DataFrame,
-    customer: DataFrame,
-    pcts: tuple[float, ...] = SEGMENT_PCTS,
-    n_buckets: int = SEGP_BUCKETS,
-    domain: tuple[float, float] = SEGP_DOMAIN,
-) -> DataFrame:
-    """100 TB form of :func:`segment_percentiles` — identical output
-    (same ⌈q·n⌉ PERCENTILE_DISC rank, same oracle), but NO per-group
-    full-sort window. :func:`segment_percentiles` partitions one window
-    by ~5 market segments, so at 100× each task sorts ~1/5 of the fact
-    table; here the histogram-narrowing of :func:`quantile_two_pass`
-    applies instead: pass 1 is one map-side-combined (segment, bucket)
-    count aggregate (histogram-sized output), the target rank ⌈q·n⌉ is
-    located in its cumulative counts, and pass 2 ranks ONLY the selected
-    buckets (~n/n_buckets rows per group-bucket, shuffle key
-    (segment, bucket) — unbounded fan-out, no bounded-cardinality sort
-    key anywhere). Equal values always share a bucket, so
+    needs NO per-group full sort: a window partitioned by ~5 market
+    segments would sort ~1/5 of the fact table in each task, so the
+    histogram narrowing of :func:`quantile_two_pass` applies instead.
+    Pass 1 is one map-side-combined (segment, bucket) count aggregate
+    (histogram-sized output); one q-panel explode over its cumulative
+    counts locates, per (segment, q), the bucket holding rank ⌈q·n⌉ and
+    the offset inside it; pass 2 ranks ONLY the selected buckets
+    (~n/n_buckets rows per (segment, bucket, q), no bounded-cardinality
+    sort key anywhere). Equal values always share a bucket, so
     global rank = cum_prev + in-bucket rank exactly; ties at equal v
-    rank arbitrarily in BOTH forms and the picked VALUE at any in-tie
-    position is the run's v, so the output is deterministic.
+    rank arbitrarily, but the picked VALUE at any in-tie position is the
+    run's v, so the output is deterministic. Values outside ``domain``
+    clamp into the edge buckets, so the fixed grid (a production run's
+    sampling pre-pass) only affects speed, never the answer.
     """
     lo, hi = domain
     width = (hi - lo) / n_buckets
@@ -2002,8 +1857,9 @@ def segment_percentiles_scaled(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     wn = Window.partitionBy("c_mktsegment")
-    # histogram-sized (≤ segments × n_buckets rows) — materialize once so
-    # the per-q selection branches don't re-run the data-sized aggregate
+    # histogram-sized (≤ segments × n_buckets rows) — materialize once:
+    # the cumulative windows partition by the segment alone, and the cut
+    # keeps that group-only exchange out of the query's plan
     cum = hist.select(
         "c_mktsegment",
         "bucket",
@@ -2011,31 +1867,37 @@ def segment_percentiles_scaled(
         F.coalesce(F.sum("c").over(wb), F.lit(0)).alias("cum_prev"),
         F.sum("c").over(wn).alias("n"),
     ).localCheckpoint()
-    sels = []
-    for q in pcts:
-        # the exact twin's rank: k = ceil(q·n) over doubles
-        k = F.ceil(F.lit(q) * F.col("n").cast("double")).cast("long")
-        sels.append(
-            cum.filter((k > F.col("cum_prev")) & (k <= F.col("cum_prev") + F.col("c")))
-            .select(
-                "c_mktsegment",
+    # one selection row per (segment, q): which bucket holds k = ⌈q·n⌉
+    qpanel = F.array(
+        *[
+            F.struct(
                 F.lit(q).alias("pct"),
-                "bucket",
-                (k - F.col("cum_prev")).alias("offset"),
-                F.col("n").cast("long").alias("n_orders"),
+                F.ceil(F.lit(q) * F.col("n").cast("double")).cast("long").alias("k"),
             )
-        )
-    sel = sels[0]
-    for s in sels[1:]:
-        sel = sel.unionByName(s)
-    wanted = sel.select("c_mktsegment", "bucket").distinct()
-    narrowed = j.select("c_mktsegment", "v", bucket.alias("bucket")).join(
-        F.broadcast(wanted), ["c_mktsegment", "bucket"]
+            for q in pcts
+        ]
     )
-    wl = Window.partitionBy("c_mktsegment", "bucket").orderBy("v")
-    local = narrowed.withColumn("lrank", F.row_number().over(wl).cast("long"))
+    k = F.col("q.k")
+    sel = (
+        cum.select(
+            "c_mktsegment", "bucket", "c", "cum_prev", "n", F.explode(qpanel).alias("q")
+        )
+        .filter((k > F.col("cum_prev")) & (k <= F.col("cum_prev") + F.col("c")))
+        .select(
+            "c_mktsegment",
+            "bucket",
+            F.col("q.pct").alias("pct"),
+            (k - F.col("cum_prev")).alias("offset"),
+            F.col("n").cast("long").alias("n_orders"),
+        )
+    )
+    # pass 2: two q's in one bucket join its rows twice, once per pct
+    narrowed = j.select("c_mktsegment", "v", bucket.alias("bucket")).join(
+        F.broadcast(sel), ["c_mktsegment", "bucket"]
+    )
+    wl = Window.partitionBy("c_mktsegment", "bucket", "pct").orderBy("v")
     picked = (
-        local.join(F.broadcast(sel), ["c_mktsegment", "bucket"])
+        narrowed.withColumn("lrank", F.row_number().over(wl).cast("long"))
         .filter(F.col("lrank") == F.col("offset"))
         .select("c_mktsegment", "pct", F.col("v").alias("value"), "n_orders")
     )
@@ -2827,101 +2689,36 @@ def revenue_bridge(
 
 
 WPCT_QS = (0.25, 0.5, 0.9)
-
-
-def weighted_percentiles_by_brand(
-    lineitem: DataFrame, part: DataFrame, pcts: tuple[float, ...] = WPCT_QS
-) -> DataFrame:
-    """Weighted PERCENTILE_DISC per brand: the smallest line price whose
-    cumulative QUANTITY reaches q·W — the survey-statistics form (each
-    row counts by its weight, not once; unweighted percentiles misstate
-    the price a typical *unit* trades at).
-
-    One brand-partitioned cumulative window (shuffle key = the group,
-    segment_percentiles' contract); the pick per (brand, q) is a
-    conditional min over the windowed frame — no per-q sub-plans. At
-    equal prices the crossing lands inside the tie run and the picked
-    VALUE is the run's price, so intra-run order cannot matter.
-    Cumulative weights are exact decimal sums cast at the compare edge.
-    """
-    j = lineitem.join(
-        F.broadcast(part.select("p_partkey", "p_brand")),
-        F.col("l_partkey") == F.col("p_partkey"),
-    ).select("p_brand", F.col("l_extendedprice").alias("v"), F.col("l_quantity").alias("wt"))
-    w_cum = (
-        Window.partitionBy("p_brand")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("p_brand")
-    # Explicit group-keyed repartition: AQE otherwise coalesces the
-    # ~25-brand shuffle to 6 post-shuffle partitions (r14 measured), and
-    # the hash partitioning satisfies the window's distribution so no
-    # extra exchange appears. Group cardinality caps parallelism by spec.
-    target_p = lineitem.sparkSession.sparkContext.defaultParallelism
-    cum = j.repartition(target_p, "p_brand").select(
-        "p_brand",
-        "v",
-        F.sum(F.col("wt").cast(DEC)).over(w_cum).cast("double").alias("cw"),
-        F.sum(F.col("wt").cast(DEC)).over(w_tot).cast("double").alias("tw"),
-    )
-    picks = [
-        F.min(
-            F.when(F.col("cw") >= F.lit(q) * F.col("tw"), F.col("v"))
-        ).alias(f"p{int(q * 100)}")
-        for q in pcts
-    ]
-    agg = cum.groupBy("p_brand").agg(F.max("tw").alias("total_weight"), *picks)
-    # melt the 25-row wide agg with ONE explode instead of a per-q
-    # unionByName: each union branch re-executed the full sort + window
-    # + aggregate over the fact table (ReuseExchange shares only the
-    # shuffle files), so the heavy cumulative window ran |pcts| times
-    qpanel = F.array(
-        *[
-            F.struct(
-                F.lit(q).alias("pct"), F.col(f"p{int(q * 100)}").alias("value")
-            )
-            for q in pcts
-        ]
-    )
-    out_rows = agg.select(
-        "p_brand", F.explode(qpanel).alias("s"), "total_weight"
-    ).select(
-        "p_brand",
-        F.col("s.pct").alias("pct"),
-        F.col("s.value").alias("value"),
-        qround(F.col("total_weight"), 4).alias("total_weight"),
-    )
-    return out_rows.orderBy("p_brand", "pct")
-
-
 WPS_BUCKETS = 1024
 WPS_DOMAIN = (900.0, 105000.0)  # l_extendedprice domain; prod: sample pass
 
 
-def weighted_percentiles_by_brand_scaled(
+def weighted_percentiles_by_brand(
     lineitem: DataFrame,
     part: DataFrame,
     pcts: tuple[float, ...] = WPCT_QS,
     n_buckets: int = WPS_BUCKETS,
     domain: tuple[float, float] = WPS_DOMAIN,
 ) -> DataFrame:
-    """100 TB form of :func:`weighted_percentiles_by_brand` — identical
-    output (same crossing rule, same oracle) with the per-brand
-    cumulative-QUANTITY window replaced by histogram narrowing. The
-    exact twin partitions a running-sum window by ~25 brands, so each
-    task sorts ~1/25 of the fact table at any scale; here pass 1 is a
-    (brand, value-bucket) weight aggregate (exact DECIMAL partial sums,
-    map-side combined, histogram-sized output), the crossing bucket per
-    (brand, q) is located in the cumulative bucket weights, and pass 2
-    runs the running sum ONLY inside selected buckets (shuffle key
-    (brand, bucket)). Exactness: DECIMAL sums are associative, bucketing
-    is monotone in v and equal values share a bucket, so
-    global cum weight at a row = bucket-prefix DECIMAL + in-bucket
-    running DECIMAL — the identical exact decimal the twin computes —
-    and the double-cast compare ``cw >= q·tw`` picks the identical
-    crossing value (ties at equal v expose only the run's v, as in the
-    twin).
+    """Weighted PERCENTILE_DISC per brand: the smallest line price whose
+    cumulative QUANTITY reaches q·W — the survey-statistics form (each
+    row counts by its weight, not once; unweighted percentiles misstate
+    the price a typical *unit* trades at).
+
+    Histogram narrowing over cumulative WEIGHT, the weighted form of
+    :func:`segment_percentiles`: a running-sum window partitioned by ~25
+    brands would sort ~1/25 of the fact table in each task, so pass 1 is
+    a (brand, value-bucket) weight aggregate (exact DECIMAL partial
+    sums, map-side combined, histogram-sized output), one q-panel
+    explode over the cumulative bucket weights locates the crossing
+    bucket per (brand, q), and pass 2 runs the running sum ONLY inside
+    selected buckets (partitioned by (brand, bucket, q)). Exactness:
+    DECIMAL sums are associative, bucketing is monotone in v and equal
+    values share a bucket, so the global cum weight at a row =
+    bucket-prefix DECIMAL + in-bucket running DECIMAL, and the
+    double-cast compare ``cw >= q·tw`` picks the crossing value. At
+    equal prices the crossing lands inside the tie run and the picked
+    VALUE is the run's price, so intra-run order cannot matter.
     """
     lo, hi = domain
     width = (hi - lo) / n_buckets
@@ -2953,37 +2750,41 @@ def weighted_percentiles_by_brand_scaled(
         F.coalesce(F.sum("bw").over(wb), zero).alias("cum_prev"),
         F.sum("bw").over(wn).cast("double").alias("tw"),
     ).localCheckpoint()
-    sels = []
-    for q in pcts:
-        th = F.lit(q) * F.col("tw")  # the twin's double threshold q·tw
-        sels.append(
-            cum.filter(
-                (F.col("cum_prev").cast("double") < th)
-                & ((F.col("cum_prev") + F.col("bw")).cast("double") >= th)
-            ).select(
-                "p_brand",
-                F.lit(q).alias("pct"),
-                "bucket",
-                "cum_prev",
-                th.alias("th"),
-                qround(F.col("tw"), 4).alias("total_weight"),
-            )
+    # one selection row per (brand, q): which bucket crosses th = q·tw
+    qpanel = F.array(
+        *[
+            F.struct(F.lit(q).alias("pct"), (F.lit(q) * F.col("tw")).alias("th"))
+            for q in pcts
+        ]
+    )
+    th = F.col("q.th")
+    sel = (
+        cum.select(
+            "p_brand", "bucket", "bw", "cum_prev", "tw", F.explode(qpanel).alias("q")
         )
-    sel = sels[0]
-    for s in sels[1:]:
-        sel = sel.unionByName(s)
-    wanted = sel.select("p_brand", "bucket").distinct()
+        .filter(
+            (F.col("cum_prev").cast("double") < th)
+            & ((F.col("cum_prev") + F.col("bw")).cast("double") >= th)
+        )
+        .select(
+            "p_brand",
+            "bucket",
+            F.col("q.pct").alias("pct"),
+            "cum_prev",
+            th.alias("th"),
+            qround(F.col("tw"), 4).alias("total_weight"),
+        )
+    )
     narrowed = j.select("p_brand", "v", "wt", bucket.alias("bucket")).join(
-        F.broadcast(wanted), ["p_brand", "bucket"]
+        F.broadcast(sel), ["p_brand", "bucket"]
     )
     wl = (
-        Window.partitionBy("p_brand", "bucket")
+        Window.partitionBy("p_brand", "bucket", "pct")
         .orderBy("v")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    local = narrowed.withColumn("lcw", F.sum(F.col("wt").cast(DEC)).over(wl))
     picked = (
-        local.join(F.broadcast(sel), ["p_brand", "bucket"])
+        narrowed.withColumn("lcw", F.sum(F.col("wt").cast(DEC)).over(wl))
         .filter((F.col("cum_prev") + F.col("lcw")).cast("double") >= F.col("th"))
         .groupBy("p_brand", "pct")
         .agg(
@@ -2991,9 +2792,7 @@ def weighted_percentiles_by_brand_scaled(
             F.max("total_weight").alias("total_weight"),
         )
     )
-    return picked.select("p_brand", "pct", "value", "total_weight").orderBy(
-        "p_brand", "pct"
-    )
+    return picked.orderBy("p_brand", "pct")
 
 
 def new_vs_returning_monthly(orders: DataFrame) -> DataFrame:
@@ -3050,7 +2849,7 @@ def pareto_customers_by_region(
 
     Dims broadcast; revenue-per-customer is the one fact-sized
     aggregate; ranking and the cumulative crossing run per region
-    (group-partitioned windows, segment_percentiles' contract). The pick
+    (group-partitioned windows: the region is the shuffle key). The pick
     is min rank where cumulative ≥ share·total — exact decimal cumsums,
     crossing compared on identical doubles. Customer-key tiebreak on
     equal revenues keeps ranks engine-stable.

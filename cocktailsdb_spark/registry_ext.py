@@ -1321,20 +1321,15 @@ from .numeric import sql_dsum, sql_qround  # noqa: E402
 
 def _q_winsor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust profiling — winsorized per-priority price stats: type-1
-    quantile cutoffs (exact element selection), broadcast clip, decimal-
-    exact moments (operators/relational.py:winsorized_stats)."""
+    quantile cutoffs (exact element selection, histogram-narrowed — no
+    per-group full sort), broadcast clip, decimal-exact moments
+    (operators/relational.py:winsorized_stats)."""
     return relational.winsorized_stats(load(spark, sf_dir, "orders"))
 
 
-def _q_winsor_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """winsorized_stats at 100 TB posture: histogram-narrowed cutoffs
-    (no per-group full sort), identical output by construction
-    (operators/relational.py:winsorized_stats_scaled)."""
-    return relational.winsorized_stats_scaled(load(spark, sf_dir, "orders"))
-
-
-# ONE oracle for both forms: the scaled plan's cutoffs are the same type-1
-# order statistics, so its green hash vs this SQL proves narrowed ≡ exact
+# the oracle ranks each whole group with a window; the plan's narrowed
+# cutoffs are the same type-1 order statistics, so a green hash vs this
+# SQL proves narrowed ≡ full sort
 _WINSOR_SQL = f"""WITH r AS (
          SELECT o_orderpriority, o_totalprice,
                 row_number() OVER (PARTITION BY o_orderpriority
@@ -1366,8 +1361,9 @@ _WINSOR_SQL = f"""WITH r AS (
               END AS win_std
        FROM g"""
 
+# both names are driver contract; one plan serves both
 register("winsorized_stats", _q_winsor, _WINSOR_SQL)
-register("winsorized_stats_scaled", _q_winsor_scaled, _WINSOR_SQL)
+register("winsorized_stats_scaled", _q_winsor, _WINSOR_SQL)
 
 
 def _q_encoding_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1594,18 +1590,12 @@ register(
 
 def _q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation with average-rank ties — Pearson on
-    exact half-integer ranks (operators/relational.py:spearman_rank_corr)."""
+    exact half-integer ranks taken from the value histogram (sorts only
+    distinct-value frames; operators/relational.py:spearman_rank_corr)."""
     return relational.spearman_rank_corr(load(spark, sf_dir, "lineitem"))
 
 
-def _q_spearman_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spearman at 100 TB posture: average ranks from the value histogram
-    (sorts only distinct-value frames), bit-identical moments
-    (operators/relational.py:spearman_rank_corr_scaled)."""
-    return relational.spearman_rank_corr_scaled(load(spark, sf_dir, "lineitem"))
-
-
-# ONE oracle for both forms: histogram avg-ranks ≡ window avg-ranks
+# the oracle ranks with windows: histogram avg-ranks ≡ window avg-ranks
 _SPEARMAN_SQL = f"""WITH r AS (
           SELECT l_returnflag,
                  rank() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
@@ -1629,8 +1619,9 @@ _SPEARMAN_SQL = f"""WITH r AS (
                END AS spearman_rho
         FROM m"""
 
+# both names are driver contract; one plan serves both
 register("spearman_rank_corr", _q_spearman, _SPEARMAN_SQL)
-register("spearman_rank_corr_scaled", _q_spearman_scaled, _SPEARMAN_SQL)
+register("spearman_rank_corr_scaled", _q_spearman, _SPEARMAN_SQL)
 
 
 def _q_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3015,8 +3006,10 @@ register("decayed_engagement", _q_decayed_engagement, _decay_sql())
 
 def _q_segment_pcts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relational — exact PERCENTILE_DISC-style per-segment percentiles
-    via one group-partitioned rank window
-    (operators/relational.py:segment_percentiles)."""
+    via two-pass histogram narrowing, with no per-segment full-sort
+    window (operators/relational.py:segment_percentiles). The oracle
+    ranks each whole segment, so a green hash proves narrowing ≡ naive
+    per-group rank."""
     return relational.segment_percentiles(
         load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer")
     )
@@ -3042,21 +3035,9 @@ def _segment_pcts_sql() -> str:
         SELECT * FROM ({picks}) ORDER BY c_mktsegment, pct"""
 
 
+# both names are driver contract; one plan serves both
 register("segment_percentiles", _q_segment_pcts, _segment_pcts_sql())
-
-
-def _q_segment_pcts_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relational — per-segment PERCENTILE_DISC via two-pass histogram
-    narrowing, the 100 TB form with no bounded-cardinality-key full-sort
-    window (operators/relational.py:segment_percentiles_scaled). Shares
-    the exact twin's oracle — green hash proves narrowing ≡ naive
-    per-group rank."""
-    return relational.segment_percentiles_scaled(
-        load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer")
-    )
-
-
-register("segment_percentiles_scaled", _q_segment_pcts_scaled, _segment_pcts_sql())
+register("segment_percentiles_scaled", _q_segment_pcts, _segment_pcts_sql())
 
 
 def _q_wd_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3861,7 +3842,11 @@ register("revenue_bridge", _q_revenue_bridge, _revenue_bridge_sql())
 
 def _q_weighted_pcts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistics — quantity-weighted PERCENTILE_DISC of line price per
-    brand (operators/relational.py:weighted_percentiles_by_brand)."""
+    brand via two-pass histogram narrowing over cumulative WEIGHT, with
+    no per-brand full-sort running-sum window
+    (operators/relational.py:weighted_percentiles_by_brand). The oracle
+    runs the global running sum, so a green hash proves the
+    bucket-prefix DECIMAL decomposition ≡ that sum."""
     return relational.weighted_percentiles_by_brand(
         load(spark, sf_dir, "lineitem"), load(spark, sf_dir, "part")
     )
@@ -3901,23 +3886,10 @@ def _weighted_pcts_sql() -> str:
         ORDER BY p_brand, pct"""
 
 
+# both names are driver contract; one plan serves both
 register("weighted_percentiles_by_brand", _q_weighted_pcts, _weighted_pcts_sql())
-
-
-def _q_weighted_pcts_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistics — quantity-weighted PERCENTILE_DISC per brand via
-    two-pass histogram narrowing over cumulative WEIGHT, the 100 TB form
-    with no per-brand full-sort running-sum window
-    (operators/relational.py:weighted_percentiles_by_brand_scaled).
-    Shares the exact twin's oracle — green hash proves the bucket-prefix
-    DECIMAL decomposition ≡ the twin's global running sum."""
-    return relational.weighted_percentiles_by_brand_scaled(
-        load(spark, sf_dir, "lineitem"), load(spark, sf_dir, "part")
-    )
-
-
 register(
-    "weighted_percentiles_by_brand_scaled", _q_weighted_pcts_scaled, _weighted_pcts_sql()
+    "weighted_percentiles_by_brand_scaled", _q_weighted_pcts, _weighted_pcts_sql()
 )
 
 

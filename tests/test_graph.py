@@ -230,6 +230,31 @@ def test_lexpack_is_lex_order_isomorphic_and_invertible(spark):
     assert by_str.index("c10") < by_str.index("c2")
 
 
+def test_lexpack_out_of_range_key_fails_loudly(spark):
+    """A key outside [0, 10^13) has no order-isomorphic packing: a
+    15-digit key used to index the pad array at −1 (element_at counts
+    that from the END) and, with ANSI off, packed silently to a wrong
+    long; a negative key packed below every valid one in either mode.
+    Both must fail the query with lexpack's own message; a NULL key
+    stays NULL."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    ok = spark.createDataFrame([(None,), (10**13 - 1,)], "key long")
+    got = [r.p for r in ok.select(G.lexpack(0, F.col("key")).alias("p")).collect()]
+    assert got[0] is None and got[1] is not None
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            for bad in (10**13, 10**14, 123456789012345, -1):
+                df = spark.createDataFrame([(bad,)], "key long")
+                with pytest.raises(Exception, match="lexpack: key outside"):
+                    df.select(G.lexpack(1, F.col("key"))).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_lpa_packed_keys_match_string_pipeline_on_lex_ties(spark):
     """r15 pin: running LPA on lexpack'd longs + decode must produce the
     SAME communities as the all-string pipeline on a graph engineered so

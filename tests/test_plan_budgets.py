@@ -49,7 +49,7 @@ BUDGETS = {
     "spearman_rank_corr_scaled": 1,  # post-ckpt: rank windows + final agg share one g-exchange
     # round-5 session-2 additions
     "asof_join_next": 1,  # union + one user-partitioned following window
-    "winsorized_stats": 2,  # rank window + clipped agg (cuts broadcast back)
+    "winsorized_stats": 4,  # same plan as winsorized_stats_scaled
     "source_cap_firstn": 2,  # salted pre-truncate window + per-source window
     # round-8 evaluation family (all post-aggregate payloads are
     # score-histogram- or bin-sized, never data-sized)

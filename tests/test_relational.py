@@ -561,6 +561,26 @@ def test_rfm_scaled_ties_score_equally_and_plan_is_partitioned(spark):
     assert plan.count("SinglePartition") <= 1
 
 
+def _assert_matches_oracle(got, name, **tables):
+    """``got`` must equal entry ``name``'s registered DuckDB oracle run
+    over the same input frames (each keyword is registered as a table),
+    under the selfcheck's value normalization — an implementation-
+    independent reference for the histogram-narrowed plans."""
+    import duckdb
+
+    from cocktailsdb_spark.registry import ORACLES
+    from tools.selfcheck import normalize
+
+    con = duckdb.connect()
+    for table, df in tables.items():
+        con.register(table, df.toPandas())
+    want = con.execute(ORACLES[name]).df()
+    got = got.toPandas()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(got) == len(want) and len(got) > 0
+    assert normalize(got) == normalize(want)
+
+
 def test_winsorized_scaled_equals_exact(spark):
     import random
 
@@ -576,13 +596,9 @@ def test_winsorized_scaled_equals_exact(spark):
     df = spark.createDataFrame(
         rows, "o_orderkey long, o_orderpriority string, o_totalprice double"
     )
-    exact = {r.o_orderpriority: r for r in relational.winsorized_stats(df).collect()}
-    fast = {
-        r.o_orderpriority: r for r in relational.winsorized_stats_scaled(df).collect()
-    }
-    assert exact.keys() == fast.keys()
-    for g in exact:
-        assert exact[g] == fast[g], g
+    _assert_matches_oracle(
+        relational.winsorized_stats(df), "winsorized_stats", orders=df
+    )
 
 
 def test_spearman_scaled_equals_exact_with_ties(spark):
@@ -599,12 +615,9 @@ def test_spearman_scaled_equals_exact_with_ties(spark):
     df = spark.createDataFrame(
         rows, "l_returnflag string, l_quantity double, l_extendedprice double"
     )
-    exact = {r.l_returnflag: r for r in relational.spearman_rank_corr(df).collect()}
-    fast = {
-        r.l_returnflag: r
-        for r in relational.spearman_rank_corr_scaled(df).collect()
-    }
-    assert exact == fast
+    _assert_matches_oracle(
+        relational.spearman_rank_corr(df), "spearman_rank_corr", lineitem=df
+    )
 
 
 def test_spearman_scaled_degenerate_constant_column_null(spark):
@@ -612,14 +625,14 @@ def test_spearman_scaled_degenerate_constant_column_null(spark):
         [("N", 5.0, 1.0), ("N", 5.0, 2.0), ("N", 5.0, 3.0)],
         "l_returnflag string, l_quantity double, l_extendedprice double",
     )
-    out = relational.spearman_rank_corr_scaled(df).collect()
+    out = relational.spearman_rank_corr(df).collect()
     assert len(out) == 1 and out[0].spearman_rho is None
 
 
 def test_scaled_stats_plans_have_no_single_partition_exchange(spark, sf_dir):
-    """The whole point of the *_scaled stats forms: no stage anywhere in
-    the plan funnels data through one partition (the exact forms do, by
-    design — they are the oracle twins)."""
+    """The whole point of the histogram-narrowed stats plans: no stage
+    anywhere in the plan funnels data through one partition. Both
+    registry names of each pair are checked."""
     import sys
     from pathlib import Path
 
@@ -627,7 +640,12 @@ def test_scaled_stats_plans_have_no_single_partition_exchange(spark, sf_dir):
     from __spark_entry__ import queries
     from tools.plan_audit import fmt_plan
 
-    for name in ("spearman_rank_corr_scaled", "winsorized_stats_scaled"):
+    for name in (
+        "spearman_rank_corr",
+        "spearman_rank_corr_scaled",
+        "winsorized_stats",
+        "winsorized_stats_scaled",
+    ):
         plan = fmt_plan(queries()[name](spark, sf_dir))
         assert "SinglePartition" not in plan, name
         assert "hashpartitioning(" in plan, name
@@ -705,9 +723,9 @@ def test_mann_whitney_bucket_boundary_values(spark):
 
 
 def test_segment_percentiles_scaled_equals_exact(spark):
-    """Histogram narrowing must reproduce the exact twin's ceil(q*n) pick
-    bit-for-bit — including ties and values outside the fixed domain
-    (clamped into edge buckets)."""
+    """Histogram narrowing must reproduce the oracle's full-sort ceil(q*n)
+    pick — including ties and values outside the fixed domain (clamped
+    into edge buckets)."""
     import random
 
     rng = random.Random(41)
@@ -726,27 +744,27 @@ def test_segment_percentiles_scaled_equals_exact(spark):
         [(b, seg) for _, b, seg, _ in rows],
         "c_custkey long, c_mktsegment string",
     ).dropDuplicates(["c_custkey"])
-    exact = {
-        (r.c_mktsegment, r.pct): (r.value, r.n_orders)
-        for r in relational.segment_percentiles(orders, customer).collect()
-    }
-    fast = {
-        (r.c_mktsegment, r.pct): (r.value, r.n_orders)
-        for r in relational.segment_percentiles_scaled(orders, customer).collect()
-    }
-    assert exact == fast
+    _assert_matches_oracle(
+        relational.segment_percentiles(orders, customer),
+        "segment_percentiles",
+        orders=orders,
+        customer=customer,
+    )
 
 
 def test_weighted_percentiles_scaled_equals_exact(spark):
-    """The bucket-prefix DECIMAL decomposition must reproduce the exact
-    twin's cw >= q*tw crossing value — ties, fractional weights, and
-    out-of-domain prices included."""
+    """The bucket-prefix DECIMAL decomposition must reproduce the
+    oracle's global running-sum cw >= q*tw crossing value — ties,
+    fractional weights, and out-of-domain prices included, plus a brand
+    whose distinct prices all share one bucket, so every q crosses in
+    the same bucket."""
     import random
 
     rng = random.Random(43)
     li, pt = [], []
     for pk in range(40):
         pt.append((pk, f"Brand#{pk % 5}"))
+    pt.append((40, "Brand#narrow"))
     k = 0
     for _ in range(3000):
         k += 1
@@ -754,25 +772,24 @@ def test_weighted_percentiles_scaled_equals_exact(spark):
         v = rng.choice([rng.uniform(100.0, 120000.0), 555.5, 555.5])
         w = float(rng.randint(1, 50))
         li.append((k, pk, float(v), w))
+    for i in range(200):
+        k += 1
+        li.append((k, 40, 1010.0 + 0.4 * i, float(rng.randint(1, 50))))
     lineitem = spark.createDataFrame(
         li, "l_orderkey long, l_partkey long, l_extendedprice double, l_quantity double"
     )
     part = spark.createDataFrame(pt, "p_partkey long, p_brand string")
-    exact = {
-        (r.p_brand, r.pct): (r.value, r.total_weight)
-        for r in relational.weighted_percentiles_by_brand(lineitem, part).collect()
-    }
-    fast = {
-        (r.p_brand, r.pct): (r.value, r.total_weight)
-        for r in relational.weighted_percentiles_by_brand_scaled(
-            lineitem, part
-        ).collect()
-    }
-    assert exact == fast
+    _assert_matches_oracle(
+        relational.weighted_percentiles_by_brand(lineitem, part),
+        "weighted_percentiles_by_brand",
+        lineitem=lineitem,
+        part=part,
+    )
 
 
 def test_percentile_scaled_plans_have_no_group_only_sort_window(spark, sf_dir):
-    """The whole point of the two r9 scale twins (VERDICT r8 task 2): no
+    """The whole point of the histogram-narrowed percentile plans
+    (VERDICT r8 task 2), under both registry names: no
     window/sort anywhere in the plan is partitioned by the bounded-
     cardinality group key ALONE (segment ~5, brand ~25 — at 100x each
     such task sorts a fixed fraction of the fact table). Every
@@ -787,7 +804,9 @@ def test_percentile_scaled_plans_have_no_group_only_sort_window(spark, sf_dir):
     from tools.plan_audit import fmt_plan
 
     for name, group_key in (
+        ("segment_percentiles", "c_mktsegment"),
         ("segment_percentiles_scaled", "c_mktsegment"),
+        ("weighted_percentiles_by_brand", "p_brand"),
         ("weighted_percentiles_by_brand_scaled", "p_brand"),
     ):
         plan = fmt_plan(queries()[name](spark, sf_dir))
